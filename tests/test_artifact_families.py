@@ -139,6 +139,23 @@ def test_publish_is_atomic_and_leaves_no_temp(spark, fresh_store):
     meta = _json.load(open(_os.path.join(root, entries[0], "meta.json")))
     assert meta["impression"] == entries[0]
 
+    # Pipeline tasks publish through the same path: a persisted
+    # LocalBackend run leaves the same clean store
+    from yuki_spark.pipeline.backends import LocalBackend
+    from yuki_spark.pipeline.dag import Pipeline
+    from yuki_spark.pipeline.impressions import ImpressionStore
+
+    pipe_root = str(fresh_store) + "-pipe"
+    p = Pipeline("atomic")
+    p.add("a", lambda s, _: s.range(6).select(F.col("id")))
+    p.add("b", lambda s, d: d["a"].where("id > 2"), deps=("a",))
+    LocalBackend(ImpressionStore(pipe_root), persist={"a", "b"}).run(spark, p)
+    entries = sorted(_os.listdir(pipe_root))
+    assert len(entries) == 2 and not [e for e in entries if "-tmp" in e]
+    for e in entries:
+        meta = _json.load(open(_os.path.join(pipe_root, e, "meta.json")))
+        assert meta["impression"] == e
+
 
 def test_below_deposit_threshold_rejected(spark, fresh_store):
     with pytest.raises(ValueError, match="cannot serve threshold"):

@@ -207,3 +207,25 @@ def test_merge_schema_reads_evolved_dataset(spark, tmp_path):
     assert set(merged.columns) == {"id", "name", "score"}
     rows = {r["id"]: r["score"] for r in merged.collect()}
     assert rows[2] == 9.5 and rows[1] is None
+
+
+def test_scan_layout_sees_nested_part_rewrite(tmp_path):
+    """The fan-out's layout cache must notice a part file rewritten
+    inside a nested partition directory, which leaves the table
+    directory's own mtime unchanged."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from yuki_spark.catalog import _scan_layout
+
+    table = tmp_path / "t"
+    for part, n in (("a", 3), ("b", 5)):
+        (table / f"p={part}").mkdir(parents=True)
+        pq.write_table(pa.table({"x": list(range(n))}), table / f"p={part}" / "0.parquet")
+    assert _scan_layout(str(table)) == (8, 2)
+
+    top = os.stat(table)
+    pq.write_table(pa.table({"x": list(range(40))}), table / "p=b" / "0.parquet")
+    os.utime(table, ns=(top.st_atime_ns, top.st_mtime_ns))
+    assert os.stat(table).st_mtime_ns == top.st_mtime_ns
+    assert _scan_layout(str(table)) == (43, 2)

@@ -1286,3 +1286,137 @@ def test_impression_verify_detects_damage(spark, tmp_path):
     assert not rep["ok"]
     assert any("unrecorded" in p for p in rep["problems"])
     assert any("row count" in p for p in rep["problems"])
+
+
+def test_publish_lost_race_reads_winner(spark, tmp_path):
+    """publish() losing the rename race returns the WINNER's deposit
+    and leaves no temp directory. The race is made deterministic by
+    letting the builder publish the same address itself (same thread:
+    the build lock is re-entrant), so the outer rename finds the
+    address taken."""
+    import os
+
+    store = ImpressionStore(str(tmp_path / "imps"))
+    imp = impression_id("raced", "1", [])
+
+    def loser():
+        _, built = store.publish(spark, imp, lambda: spark.range(3).select("id"))
+        assert built
+        return spark.range(10).select("id")
+
+    df, _ = store.publish(spark, imp, loser)
+    assert sorted(r.id for r in df.collect()) == [0, 1, 2]
+    assert os.listdir(store.root) == [imp]
+    assert store.meta(imp)["impression"] == imp
+    # a deposited address is read without building
+    again, built = store.publish(spark, imp, lambda: 1 / 0)
+    assert not built and again.count() == 3
+
+
+def test_persisted_task_publishes_over_failed_runs_logs(spark, tmp_path):
+    """A failed run of a persisted task leaves a logs-only directory at
+    the task's address (_finalize's write_logs); the next run must
+    still publish there and end finished."""
+    import os
+
+    store = ImpressionStore(str(tmp_path / "imps"))
+    fail = {"on": True}
+
+    def fn(s, _):
+        if fail["on"]:
+            raise RuntimeError("first run fails")
+        return s.range(4).select(F.col("id"))
+
+    def mk():
+        p = Pipeline("heal")
+        p.add("t", fn)
+        return p
+
+    p1 = mk()
+    LocalBackend(store, persist={"t"}).run(spark, p1)
+    imp = p1.tasks["t"].impression
+    assert p1.tasks["t"].status == "failed"
+    assert store.logs(imp) is not None and not store.exists(imp)
+
+    fail["on"] = False
+    p2 = mk()
+    out = LocalBackend(store, persist={"t"}).run(spark, p2)
+    assert p2.tasks["t"].status == "finished"
+    assert store.exists(imp) and out["results"]["t"].count() == 4
+    assert store.logs(imp)["status"] == "finished"
+    assert os.listdir(store.root) == [imp]
+
+
+def test_concurrent_pipelines_build_shared_task_once(spark, tmp_path):
+    """Two pipelines run from two threads on one store share a
+    persisted task (same name, version and deps): its fn runs exactly
+    once, the other run reuses the deposit, and both see equal rows.
+    Each run opens its own ImpressionStore on the root — the build
+    lock is per deposit directory, not per store object."""
+    import threading
+    import time
+
+    root = str(tmp_path / "imps")
+    calls = []
+    start = threading.Barrier(2)
+
+    def shared(s, _):
+        calls.append(threading.get_ident())
+        time.sleep(0.5)  # keep the build open while the other run arrives
+        return s.range(50).select(F.col("id"))
+
+    outs: dict[int, dict] = {}
+    errors: list[BaseException] = []
+
+    def run(i):
+        try:
+            p = Pipeline(f"p{i}")
+            p.add("shared", shared)
+            p.add("evens", lambda s, d: d["shared"].where("id % 2 = 0"), deps=("shared",))
+            start.wait()
+            outs[i] = LocalBackend(ImpressionStore(root), persist={"shared"}).run(spark, p)
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(calls) == 1
+    assert sorted(o["statuses"]["shared"] for o in outs.values()) == ["finished", "reused"]
+    rows = [sorted(r.id for r in o["results"]["evens"].collect()) for o in outs.values()]
+    assert rows[0] == rows[1] == list(range(0, 50, 2))
+
+
+def test_build_lock_is_shared_across_store_objects(tmp_path):
+    """Stress: more threads than cores, each opening its own
+    ImpressionStore on one root, serialize on the same build lock — a
+    read-modify-write under it never loses an update."""
+    import sys
+    import threading
+
+    root = str(tmp_path / "imps")
+    count = {"n": 0}
+
+    def work():
+        for _ in range(200):
+            with ImpressionStore(root)._lock("addr#build"):
+                n = count["n"]
+                threading.Event().wait(0)  # invite a switch mid-update
+                count["n"] = n + 1
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert count["n"] == 16 * 200

@@ -6,8 +6,11 @@
 # dominate); the split runs them beside the rest of the suite. Each
 # pytest process isolates its own artifact-store sandbox (conftest
 # mkdtemps a per-session YUKI_SPARK_DEDUP_STORE / _SIM_STORE), so the
-# halves never contend on deposits; even a shared store would be safe
-# (deposit_or_reuse locks per impression and publishes atomically).
+# halves never contend on deposits; even a shared store would be safe:
+# family artifacts and persisted Pipeline tasks both deposit through
+# ImpressionStore.publish, which builds each address once per process
+# and renames a complete deposit into place (a lost race reads the
+# winner).
 #
 # Usage: tools/citest.sh [extra pytest args for both halves]
 set -u

@@ -86,30 +86,41 @@ _FAN_OUT_DEFAULT: dict[str, bool] = {"documents": True}
 # (rows, row-group scan units) per resolved path — parquet FOOTER
 # metadata only (the same catalog-statistics surface as table_rows;
 # on a cluster this is the metastore/manifest lookup). Never caches
-# data or results; keyed on (path, mtime) so an in-process rewrite of
-# the same path (a datagen refresh between phases) re-derives the
-# layout instead of sizing the fan-out from stale stats (r14 ADVICE).
-_LAYOUT_CACHE: dict[tuple[str, float], tuple[int, int]] = {}
+# data or results; each entry is checked against the (relpath, size,
+# mtime_ns) of every part file under the path, so an in-process
+# rewrite anywhere below it — including inside a nested partition
+# directory, which leaves the top directory's mtime alone —
+# re-derives the layout instead of sizing the fan-out from stale
+# stats.
+_LAYOUT_CACHE: dict[str, tuple[tuple, tuple[int, int]]] = {}
 
 
 def _scan_layout(path: str) -> tuple[int, int]:
-    key = (path, os.path.getmtime(path))
-    if key in _LAYOUT_CACHE:
-        return _LAYOUT_CACHE[key]
+    if os.path.isdir(path):
+        files = sorted(
+            os.path.join(dirpath, f)
+            for dirpath, _dirs, fs in os.walk(path)
+            for f in fs
+            if f.endswith(".parquet")
+        )
+    else:
+        files = [path]
+    stats = [os.stat(f) for f in files]
+    sig = tuple(
+        (os.path.relpath(f, path), st.st_size, st.st_mtime_ns)
+        for f, st in zip(files, stats)
+    )
+    hit = _LAYOUT_CACHE.get(path)
+    if hit is not None and hit[0] == sig:
+        return hit[1]
     import pyarrow.parquet as pq
 
     rows, units = 0, 0
-    if not os.path.isdir(path):
-        md = pq.ParquetFile(path).metadata
-        rows, units = md.num_rows, md.num_row_groups
-    else:
-        for dirpath, _dirs, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    md = pq.ParquetFile(os.path.join(dirpath, f)).metadata
-                    rows += md.num_rows
-                    units += md.num_row_groups
-    _LAYOUT_CACHE[key] = (rows, units)
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        rows += md.num_rows
+        units += md.num_row_groups
+    _LAYOUT_CACHE[path] = (sig, (rows, units))
     return rows, units
 
 

@@ -128,7 +128,13 @@ def jaccard_pairs(docs: DataFrame, threshold: float) -> DataFrame:
 def jaccard_candidates(ts: DataFrame, threshold: float) -> DataFrame:
     """Prefix-filtered candidate pairs (doc_a < doc_b) from a
     token_sets table — every pair with Jaccard ≥ threshold is included
-    (no false negatives); callers verify on the full sets."""
+    (no false negatives); callers verify on the full sets.
+
+    Input precondition (not checked): ``ts`` is :func:`token_sets`
+    shaped — one row per doc_id whose ``toks`` holds DISTINCT tokens
+    and whose ``set_size`` equals their count. Each pair is emitted at
+    its first shared prefix token only, with no ``distinct``; a
+    repeated token can emit a pair more than once."""
     posts = ts.select("doc_id", "set_size", F.explode("toks").alias("tok"))
     df_tbl = posts.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     # canonical rarest-first order; floor() (not ceil) keeps the prefix
@@ -540,6 +546,13 @@ def minhash_pairs_from(
     """:func:`minhash_lsh_pairs`' core over precomputed token sets and
     band keys — callers that reuse both (the streaming ingest) avoid
     re-running the tokenization and MinHash UDF.
+
+    Input precondition (not checked): ``bands`` is :func:`band_index`
+    shaped — exactly one row per (doc_id, band), with all N_BANDS
+    bands present for every doc, and ``ts`` holds distinct tokens per
+    doc (as :func:`token_sets` builds it). Each pair is emitted at its
+    least shared band only, with no ``distinct``; a duplicated or
+    missing band row can emit a pair twice or drop it.
 
     The band self-join carries each side's set size so the exact
     length filter (J ≥ t forces t·|a| ≤ |b| and t·|b| ≤ |a| — the

@@ -19,7 +19,8 @@ from __future__ import annotations
 from contextlib import contextmanager
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .dag import Pipeline
 from .impressions import ImpressionStore, impression_id
@@ -62,6 +63,11 @@ def _task_conf(spark: SparkSession, conf: dict[str, str]):
                     spark.conf.set(k, old)
 
 
+def _explain(spark: SparkSession, df: DataFrame) -> str:
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode)
+
+
 class DryRunBackend:
     """Compile-only: returns {task: explain string}."""
 
@@ -78,11 +84,7 @@ class DryRunBackend:
             with _task_conf(spark, t.conf):
                 df = t.fn(spark, inputs)
                 results[name] = df
-                plans[name] = df._jdf.queryExecution().explainString(
-                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                        "formatted"
-                    )
-                )
+                plans[name] = _explain(spark, df)
             t.status = "compiled"  # plan built, not executed
         return plans
 
@@ -358,73 +360,56 @@ class LocalBackend:
         imp = impression_id(t.name, t.version, dep_ids, plan=plan_str)
         imp_ids[name] = imp
         t.impression = imp  # purge's keep-set must see the real address
+        # an archived deposit is shielded: never reused, never
+        # rewritten — the task recompiles for its consumers instead
+        persist = (
+            self.store is not None
+            and (name in self.persist or force_persist)
+            and not self.store.is_archived(imp)
+        )
         # transient-failure tolerance: a long pipeline shouldn't
         # die to one flaky task attempt (Yuki reruns failed jobs
         # on resubmit; here attempts are in-process)
         for attempt in range(self.max_retries + 1):
+            obs = None
+
+            def build() -> DataFrame:
+                nonlocal precompiled, obs
+                if precompiled is not None:
+                    df, precompiled = precompiled, None
+                else:
+                    df = t.fn(spark, {d: results[d] for d in t.deps})
+                if self.store is not None and self.collect_logs:
+                    explains[name] = _explain(spark, df)
+                if self.observe:
+                    obs = Observation(f"{pipe.name}.{name}#{attempt}")
+                    df = df.observe(
+                        obs,
+                        F.count(F.lit(1)).alias("n_rows"),
+                        *self.metrics.get(name, []),
+                    )
+                return df
+
             try:
                 if compile_err is not None:
                     e, compile_err = compile_err, None
                     raise e
-                if (
-                    self.store is not None
-                    and (name in self.persist or force_persist)
-                    and self.store.exists(imp)
-                    and not self.store.is_archived(imp)
-                ):
-                    results[name] = self.store.read(spark, imp)
-                    if pipe in self._killed_pipes:
-                        # kill landed while this task ran: 'kill marks
-                        # unfinished work failed' must win the race
-                        t.status = "failed"
-                        self._journal(pipe, name, "failed")
-                        break
-                    t.status = "reused"
-                    self._journal(pipe, name, "reused")
-                    t.result = results[name]
-                    break
                 with _task_conf(spark, t.conf):
-                    if precompiled is not None:
-                        df, precompiled = precompiled, None
-                    else:
-                        inputs = {d: results[d] for d in t.deps}
-                        df = t.fn(spark, inputs)
-                    if self.store is not None and self.collect_logs:
-                        explains[name] = df._jdf.queryExecution().explainString(
-                            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                                "formatted"
-                            )
-                        )
-                    obs = None
-                    if self.observe:
-                        from pyspark.sql import Observation
-                        from pyspark.sql import functions as F
-
-                        obs = Observation(f"{pipe.name}.{name}#{attempt}")
-                        df = df.observe(
-                            obs,
-                            F.count(F.lit(1)).alias("n_rows"),
-                            *self.metrics.get(name, []),
-                        )
-                    executed = False
-                    if (
-                        self.store is not None
-                        and (name in self.persist or force_persist)
-                        and not (self.store.exists(imp) and self.store.is_archived(imp))
-                    ):
-                        self.store.write(
+                    if persist:
+                        # a deposited address is read without calling fn
+                        df, executed = self.store.publish(
+                            spark,
                             imp,
-                            df,
+                            build,
                             meta={"task": name, "pipeline": pipe.name, "deps": dep_ids},
                         )
-                        df = self.store.read(spark, imp)
-                        executed = True
-                    elif self.eager:
-                        # opt-in: execute every task for per-task
-                        # status/failure fidelity (costs O(depth²)
-                        # recompute on deep chains — small inputs only)
-                        df.count()
-                        executed = True
+                    else:
+                        df, executed = build(), self.eager
+                        if executed:
+                            # opt-in: execute every task for per-task
+                            # status/failure fidelity (costs O(depth²)
+                            # recompute on deep chains — small inputs only)
+                            df.count()
                 results[name] = df
                 t.result = df
                 if obs is not None:
@@ -439,7 +424,7 @@ class LocalBackend:
                     t.status = "failed"
                     self._journal(pipe, name, "failed")
                     break
-                t.status = "finished" if executed else "compiled"
+                t.status = "finished" if executed else "reused" if persist else "compiled"
                 self._journal(pipe, name, t.status)
                 break
             except Exception as e:  # noqa: BLE001 — mirror Yuki's broad failure marking

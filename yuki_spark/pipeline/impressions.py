@@ -25,6 +25,9 @@ import re
 import shutil
 import threading
 import time
+import uuid
+import weakref
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,20 +55,33 @@ def impression_id(
     return hashlib.sha256(payload.encode()).hexdigest()[:32]
 
 
+# The process's ONE per-address lock table, keyed by deposit directory
+# plus a purpose suffix, so every ImpressionStore on a root shares it:
+# - bare address: a read's crash-heal never interleaves with a
+#   compact()'s rename swap (it would "restore" the mid-swap .old);
+# - ``#compact``: concurrent compacts of one deposit serialize;
+# - ``#build``: publish() builds each address once per process. An
+#   RLock: a builder may publish an UPSTREAM address itself (graph →
+#   graph_nnd → graph_nnd2); acquisition follows the acyclic
+#   dependency DAG, so threads cannot deadlock.
+# Weak values: an entry lives only while a thread holds or awaits it.
+_LOCKS: weakref.WeakValueDictionary[str, Any] = weakref.WeakValueDictionary()
+_LOCKS_GUARD = threading.Lock()
+
+
 class ImpressionStore:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
-        # per-impression locks: a read's crash-heal must never
-        # interleave with a concurrent compact()'s rename swap (the
-        # heal would "restore" the mid-swap .old and break the swap);
-        # run_parallel/run_async make concurrent reads real
-        self._locks: dict[str, threading.RLock] = {}
-        self._locks_guard = threading.Lock()
+        self._lock_root = os.path.realpath(root)
 
-    def _lock(self, imp_id: str) -> threading.RLock:
-        with self._locks_guard:
-            return self._locks.setdefault(imp_id, threading.RLock())
+    def _lock(self, key: str) -> threading.RLock:
+        path = os.path.join(self._lock_root, key)
+        with _LOCKS_GUARD:
+            lock = _LOCKS.get(path)
+            if lock is None:
+                lock = _LOCKS[path] = threading.RLock()
+            return lock
 
     def _dir(self, imp_id: str) -> str:
         return os.path.join(self.root, imp_id)
@@ -130,6 +146,66 @@ class ImpressionStore:
         with open(os.path.join(self._dir(imp_id), "meta.json"), "w") as f:
             json.dump(doc, f, indent=2)
         return path
+
+    def publish(
+        self,
+        spark: SparkSession,
+        imp_id: str,
+        build: Callable[[], DataFrame],
+        meta: dict[str, Any] | None = None,
+    ) -> tuple[DataFrame, bool]:
+        """Deposit-or-reuse one address — the store's only publish path
+        (Pipeline tasks and query-artifact families both use it).
+        Returns ``(deposit read, built)``. A deposited address is read
+        and ``build`` never runs. Otherwise, under the address's build
+        lock and after a second check, ``build()`` runs once and its
+        DataFrame is written under a temp id (its ``meta.json`` already
+        records the final address), then renamed into place whole: no
+        reader in any process sees a half-written deposit, and a lost
+        race discards the temp copy and reads the winner. A failed
+        build or write leaves no temp directory and re-raises."""
+        if self.exists(imp_id):
+            return self.read(spark, imp_id), False
+        with self._lock(imp_id + "#build"):
+            if self.exists(imp_id):
+                return self.read(spark, imp_id), False
+            df = build()
+            tmp_id = f"{imp_id}-tmp{os.getpid()}-{uuid.uuid4().hex[:8]}"
+            try:
+                self.write(tmp_id, df, meta={**(meta or {}), "impression": imp_id})
+                self._install(tmp_id, imp_id)
+            finally:
+                shutil.rmtree(self._dir(tmp_id), ignore_errors=True)
+            return self.read(spark, imp_id), True
+
+    def _install(self, tmp_id: str, imp_id: str) -> None:
+        """Rename a written temp deposit to its address, or leave a
+        winner's deposit there. A directory at the address that is not
+        a deposit (a failed run's logs-only artifact) is moved aside
+        and deleted first."""
+        final = self._dir(imp_id)
+        aside = self._dir(tmp_id) + "-aside"
+        for _ in range(3):
+            try:
+                os.rename(self._dir(tmp_id), final)
+                return
+            except OSError:
+                if self.exists(imp_id):
+                    return  # lost the race: the winner's deposit is complete
+            try:
+                os.rename(final, aside)
+            except OSError:
+                continue  # another writer moved it first
+            if os.path.exists(os.path.join(aside, "meta.json")):
+                # a deposit landed between the check and the move: it
+                # is the winner, put it back
+                try:
+                    os.rename(aside, final)
+                    return
+                except OSError:
+                    pass  # the address was taken again: retry from the top
+            shutil.rmtree(aside, ignore_errors=True)
+        raise OSError(f"impression {imp_id}: could not publish over {final}")
 
     def verify(self, imp_id: str, deep: bool = False) -> dict[str, Any]:
         """Integrity check of a deposited impression against its

@@ -2,61 +2,49 @@
 eating its own O5 dogfood (SURVEY §2.1: ImpressionStore,
 skip-if-deposited) at the QUERY layer.
 
-Two families consume this machinery:
+Each artifact family is one :class:`Family` record (store root, base
+version, covered code modules, build counter):
 
 - :mod:`.dedup_family` — the documents near-dup pipeline (set groups,
   token sets, verified pairs, CC labels) shared by d2/d3/d11/d20/d33;
 - :mod:`.sim_family`  — ANN index results (exact/LSH/IVF/PQ top-k,
   the kNN graph) shared by s3/s4/s8/s11 and their evaluation
-  harnesses s6/s12.
+  harnesses s6/s12;
+- :mod:`.lm_family`   — corpus-trained models (trigram/bigram LM
+  scores, the quality classifier) behind d52/d54/d56/d59/d60;
+- ``docs.BPE``        — the BPE tokenizer artifacts of d44/d46/d57/d58.
+
+Every family deposit goes through :func:`deposit_or_reuse`, which
+publishes through :meth:`ImpressionStore.publish` — the same publish
+path (per-address build lock, atomic rename into place) Pipeline tasks
+use — and only adds the degraded-store fallback and the build counter.
 
 Contract: an artifact's address is a sha over (key, family version,
 dep ids) where the dep ids start from a TABLE FINGERPRINT (part-file
 relpaths + byte sizes + mtimes + any parameters). A regenerated input
 or changed parameter produces a new address and a fresh compute —
-never a stale reuse; a changed builder requires a family-version bump
-(the store's O5 contract). An unwritable store root degrades to an
-unpersisted lazy-checkpointed build: correctness is never hostage to
-a disk.
+never a stale reuse; a changed builder changes the family version
+through its code hash (the store's O5 contract). An unwritable store
+root degrades to an unpersisted lazy-checkpointed build: correctness
+is never hostage to a disk.
 """
 from __future__ import annotations
 
 import hashlib
+import importlib
 import inspect
 import json
 import os
-import shutil
 import stat as stat_mod
 import tempfile
-import threading
 from collections.abc import Callable
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table_path
 from ..pipeline.impressions import ImpressionStore, impression_id
-
-# PER-ADDRESS build locks (r15: the former single global RLock
-# serialized every in-process build, so a caller overlapping four
-# INDEPENDENT deposit builds from a thread pool — guide §2.6, s6's
-# exact/lsh/ivf/pq cold pass — gained nothing). A lock still
-# serializes concurrent builders of the SAME address (the original
-# duplicate-write hazard); different addresses build concurrently.
-# RE-ENTRANT per address: a builder may itself call deposit_or_reuse
-# for an UPSTREAM artifact (the NN-descent chain graph → graph_nnd →
-# graph_nnd2) — that nested call takes the upstream address's own
-# lock. Deadlock-free across threads because acquisition follows the
-# artifact dependency DAG (acyclic): every thread holding lock(X)
-# only ever waits on locks of X's ancestors, so a wait cycle would
-# require a dependency cycle.
-_build_locks: dict[str, threading.RLock] = {}
-_build_locks_guard = threading.Lock()
-
-
-def _build_lock(imp: str) -> threading.RLock:
-    with _build_locks_guard:
-        return _build_locks.setdefault(imp, threading.RLock())
 
 
 def default_store_root(env_var: str, name: str) -> str | None:
@@ -181,52 +169,72 @@ def deposit_or_reuse(
     computes: dict[str, int],
     name: str,
 ) -> tuple[DataFrame, str]:
-    """Deposit-or-reuse one artifact; returns (DataFrame, address).
+    """Deposit-or-reuse one artifact through
+    :meth:`ImpressionStore.publish` (per-address build lock, atomic
+    rename-into-place publish); returns (DataFrame, address).
     ``computes[name]`` increments exactly when the builder ran — the
     observability hook the reuse tests assert on.
-
-    The build lock serializes in-process builders (run_parallel-style
-    concurrency would otherwise race two identical writes). ACROSS
-    processes the publish is ATOMIC: the deposit is written under a
-    per-pid temp address and renamed into place — a reader can never
-    observe a half-written deposit as deposited (meta.json only
-    exists inside the temp directory until the rename), and a lost
-    race (rename target already exists) discards the temp copy and
-    reads the winner — no overwrite of a completed deposit, ever.
 
     ANY store failure (unwritable root, disk-full mid-write, a
     concurrent sweep) degrades to the unpersisted lazy plan the
     builder produced — correctness is never hostage to a disk. The
     builder runs at most once per call either way."""
     imp = impression_id(key, version, dep_ids)
-    store: ImpressionStore | None
+    built: list[DataFrame] = []
+
+    def build() -> DataFrame:
+        built.append(builder())
+        computes[name] = computes.get(name, 0) + 1
+        return built[0]
+
     try:
         store = ImpressionStore(root) if root is not None else None
     except OSError:
         store = None
-    if store is not None and store.exists(imp):
-        return store.read(spark, imp), imp
-    with _build_lock(imp):
-        if store is not None and store.exists(imp):
-            return store.read(spark, imp), imp
-        df = builder()
-        computes[name] = computes.get(name, 0) + 1
-        if store is None:
-            return df.localCheckpoint(eager=False), imp
-        tmp_id = f"{imp}-tmp{os.getpid()}"
-        try:
-            store.write(tmp_id, df, meta={"task": key, "deps": dep_ids})
-            meta = store.meta(tmp_id)
-            meta["impression"] = imp
-            with open(os.path.join(store._dir(tmp_id), "meta.json"), "w") as f:
-                json.dump(meta, f, indent=2)
-            try:
-                os.rename(store._dir(tmp_id), store._dir(imp))
-            except OSError:
-                # lost the cross-process race: the winner's deposit is
-                # complete (it was renamed whole) — read theirs
-                shutil.rmtree(store._dir(tmp_id), ignore_errors=True)
-            return store.read(spark, imp), imp
-        except Exception:  # noqa: BLE001 — degrade, never fail the query
-            shutil.rmtree(store._dir(tmp_id), ignore_errors=True)
-            return df.localCheckpoint(eager=False), imp
+    if store is None:
+        return build().localCheckpoint(eager=False), imp
+    try:
+        df, _ = store.publish(spark, imp, build, meta={"task": key, "deps": dep_ids})
+    except Exception:  # noqa: BLE001 — degrade, never fail the query
+        if not built:
+            raise  # nothing was built to degrade to: a read or the builder failed
+        df = built[0].localCheckpoint(eager=False)
+    return df, imp
+
+
+@dataclass(frozen=True)
+class Family:
+    """One family of query artifacts: where its deposits live
+    (``env_var`` override, else a private temp dir ``dir_name``), the
+    version its addresses carry (``version`` plus a code hash of
+    ``modules``), and the per-artifact build counter ``computes``.
+    Modules are given by name relative to this package and imported
+    when an artifact is requested, so a family may cover the module
+    that imports it (sim.py, docs.py) without an import cycle."""
+
+    key: str
+    env_var: str
+    dir_name: str
+    version: str
+    modules: tuple[str, ...]
+    computes: dict[str, int]
+
+    def store_root(self) -> str | None:
+        return default_store_root(self.env_var, self.dir_name)
+
+    def deposit(
+        self,
+        spark: SparkSession,
+        name: str,
+        dep_ids: list[str],
+        builder: Callable[[], DataFrame],
+        modules: tuple[str, ...] = (),
+    ) -> tuple[DataFrame, str]:
+        """Deposit-or-reuse artifact ``name``; its address also covers
+        the artifact's own extra ``modules``."""
+        mods = [importlib.import_module(m, __package__) for m in self.modules + modules]
+        version = self.version + "+" + code_fingerprint(*mods)
+        return deposit_or_reuse(
+            spark, self.store_root(), f"{self.key}.{name}", version, dep_ids,
+            builder, self.computes, name,
+        )

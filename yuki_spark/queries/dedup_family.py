@@ -27,13 +27,14 @@ Artifacts (rep-level — small next to the corpus text):
 - ``rep_lsh95``     — d3's banded-candidate pairs, exact-verified at .95
 - ``rep_clusters08``— CC labels over ``rep_pairs08`` (d11/d20)
 
-Content address: (artifact name, FAMILY_VERSION, corpus fingerprint +
+Every artifact is one ``FAMILY.deposit`` (the shared
+:class:`~.artifact_store.Family` record). Content address: (artifact
+name, FAMILY_VERSION + builder code hash, corpus fingerprint +
 upstream artifact addresses). The fingerprint covers the documents
 table's part-file names/sizes/mtimes plus the doc_id cap, so a
 regenerated corpus (same path, new bytes) or a changed cap produces a
-new address and a fresh compute — never a stale reuse. FAMILY_VERSION
-must be bumped on ANY semantic change to the builders (the store's O5
-version-bump contract).
+new address and a fresh compute — never a stale reuse; an edit to the
+builder code does the same through the code hash.
 
 100 TB shape: these deposits ARE what a production dedup run persists —
 the signature/pair tables are O(corpus tokens) and O(near-dup edges),
@@ -45,25 +46,19 @@ filesystem path).
 """
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load, table_rows
 from ..operators import dedup
-from .artifact_store import (
-    code_fingerprint,
-    default_store_root,
-    deposit_or_reuse,
-    table_fingerprint,
-)
+from .artifact_store import Family, table_fingerprint
 
-# The effective version folds in a hash of the builder code (this
-# module + operators/dedup.py): any edit auto-invalidates deposits, so
-# the correctness gates can never validate a stale deposit's output
-# after a code change. FAMILY_VERSION remains for deliberate semantic
-# bumps that don't change these two files (e.g. a constant moved).
+# The effective version folds in a hash of the builder code (FAMILY's
+# modules: this one, operators/dedup.py and the tokenizer/hash/codec
+# modules it builds on): any edit auto-invalidates deposits, so the
+# correctness gates can never validate a stale deposit's output after
+# a code change. FAMILY_VERSION remains for deliberate semantic bumps
+# that don't change these files (e.g. a constant moved).
 FAMILY_VERSION = "r6-1"
 PAIR_THRESHOLD = 0.8  # the one exact-pairs run; 0.95 consumers filter it
 
@@ -72,50 +67,22 @@ PAIR_THRESHOLD = 0.8  # the one exact-pairs run; 0.95 consumers filter it
 # test asserts on.
 COMPUTES: dict[str, int] = {}
 
-
-def store_root() -> str | None:
-    return default_store_root("YUKI_SPARK_DEDUP_STORE", "yuki_spark-dedup-family")
+FAMILY = Family(
+    "dedup_family",
+    "YUKI_SPARK_DEDUP_STORE",
+    "yuki_spark-dedup-family",
+    FAMILY_VERSION,
+    (".dedup_family", "..operators.dedup", "..functions", "..operators.text",
+     "..operators.multimodal", "..operators.codecs"),
+    COMPUTES,
+)
+store_root = FAMILY.store_root
 
 
 def corpus_fingerprint(sf_dir: str, cap: int) -> str:
     """Identity of the capped documents corpus (artifact_store
     fingerprint over the documents table + the doc_id cap)."""
     return table_fingerprint(sf_dir, "documents", {"cap": cap})
-
-
-def _artifact(
-    spark: SparkSession,
-    name: str,
-    dep_ids: list[str],
-    builder: Callable[[], DataFrame],
-) -> tuple[DataFrame, str]:
-    """Deposit-or-reuse one family artifact (see
-    artifact_store.deposit_or_reuse for the locking / degraded-disk
-    contract)."""
-    import sys
-
-    from .. import functions as fns
-    from ..operators import codecs as codecs_mod
-    from ..operators import multimodal as mm_mod
-    from ..operators import text as text_mod
-
-    # operators/dedup.py builds on functions.tokens/portable_hash60 and
-    # operators/text's tokenizer — fold those transitive deps into the
-    # address too, so an edit to tokenization invalidates every deposit
-    # derived from it (the gates must never validate a stale deposit).
-    version = FAMILY_VERSION + "+" + code_fingerprint(
-        sys.modules[__name__], dedup, fns, text_mod, mm_mod, codecs_mod
-    )
-    return deposit_or_reuse(
-        spark,
-        store_root(),
-        f"dedup_family.{name}",
-        version,
-        dep_ids,
-        builder,
-        COMPUTES,
-        name,
-    )
 
 
 def artifacts(
@@ -152,18 +119,18 @@ def artifacts(
         return load(spark, sf_dir, "documents").where(F.col("doc_id") < cap)
 
     out: dict[str, DataFrame] = {}
-    g, g_id = _artifact(spark, "groups", [fp], lambda: dedup.set_groups(docs()))
+    g, g_id = FAMILY.deposit(spark, "groups", [fp], lambda: dedup.set_groups(docs()))
     out["groups"] = g
 
     def rep_ts_builder() -> DataFrame:
         reps = dedup._rep_docs(docs(), g)
         return dedup.token_sets(reps)
 
-    rts, rts_id = _artifact(spark, "rep_ts", [fp, g_id], rep_ts_builder)
+    rts, rts_id = FAMILY.deposit(spark, "rep_ts", [fp, g_id], rep_ts_builder)
     out["rep_ts"] = rts
 
     if "rep_pairs08" in want:
-        rp08, rp08_id = _artifact(
+        rp08, rp08_id = FAMILY.deposit(
             spark,
             "rep_pairs08",
             [fp, rts_id],
@@ -171,26 +138,26 @@ def artifacts(
         )
         out["rep_pairs08"] = rp08
         if "rep_clusters08" in want:
-            out["rep_clusters08"], _ = _artifact(
+            out["rep_clusters08"], _ = FAMILY.deposit(
                 spark,
                 "rep_clusters08",
                 [fp, rp08_id],
                 lambda: dedup.dedup_clusters(out["rep_pairs08"]),
             )
     if "rep_bands" in want:
-        rbands, rbands_id = _artifact(
+        rbands, rbands_id = FAMILY.deposit(
             spark, "rep_bands", [fp, rts_id], lambda: dedup.band_index(rts)
         )
         out["rep_bands"] = rbands
         if "rep_lsh95" in want:
-            out["rep_lsh95"], _ = _artifact(
+            out["rep_lsh95"], _ = FAMILY.deposit(
                 spark,
                 "rep_lsh95",
                 [fp, rts_id, rbands_id],
                 lambda: dedup.minhash_pairs_from(rts, rbands, 0.95),
             )
     if "rep_simhash3" in want:
-        out["rep_simhash3"], _ = _artifact(
+        out["rep_simhash3"], _ = FAMILY.deposit(
             spark,
             "rep_simhash3",
             [fp, rts_id],
@@ -203,7 +170,7 @@ def artifacts(
         # simhash — encode real PNGs, decode, dHash, pigeonhole-band
         from ..operators import multimodal as mm
 
-        out["rep_phash6"], _ = _artifact(
+        out["rep_phash6"], _ = FAMILY.deposit(
             spark,
             "rep_phash6",
             [fp, rts_id],

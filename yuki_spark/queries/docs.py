@@ -15,6 +15,7 @@ from ..catalog import load, table_rows
 from ..functions import DEC, portable_hash60, sql_portable_hash60
 from ..operators import bpe, dedup, html, multimodal, sampling, text
 from . import dedup_family
+from .artifact_store import Family, table_fingerprint
 
 # The near-dup pair queries (d2/d3/d4/d11/d20) bound their slice by a
 # doc_id cap so the PAIRWISE oracle verification stays bounded. The
@@ -498,35 +499,29 @@ def d12_subword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BPE_COMPUTES: dict[str, int] = {}  # observability hook (reuse tests)
 
+# The BPE tokenizer artifacts (tokenized vocabulary, learned merges),
+# deposited under the dedup-family store root; addresses cover
+# operators/bpe.py and this module.
+BPE = Family(
+    "docs",
+    "YUKI_SPARK_DEDUP_STORE",
+    "yuki_spark-dedup-family",
+    "1",
+    ("..operators.bpe", ".docs"),
+    _BPE_COMPUTES,
+)
+
 
 def _bpe_vocab(spark: SparkSession, sf_dir: str, vocab) -> DataFrame:
     """The BPE-tokenized vocabulary (word, tok_str, n_tok) as ONE
-    deposit per corpus through the dedup-family store root: the table
-    is identical for every consumer (it depends only on the corpus
-    vocabulary and the merges artifact), so d44 and d46 read one
-    artifact instead of each re-running the Arrow tokenizer pass —
-    exactly the persist-the-tokenizer-output shape a production
-    pipeline uses. Falls back to computing in-plan when the store is
-    unavailable (deposit_or_reuse's contract)."""
-    import sys
-
-    from ..operators import bpe as bpe_mod
-    from . import dedup_family
-    from .artifact_store import code_fingerprint, deposit_or_reuse, table_fingerprint
-
+    deposit per corpus: the table is identical for every consumer (it
+    depends only on the corpus vocabulary and the merges artifact), so
+    d44 and d46 read one artifact instead of each re-running the Arrow
+    tokenizer pass — exactly the persist-the-tokenizer-output shape a
+    production pipeline uses. Falls back to computing in-plan when the
+    store is unavailable (deposit_or_reuse's contract)."""
     fp = table_fingerprint(sf_dir, "documents", {"what": "bpe_vocab"})
-    version = "1+" + code_fingerprint(bpe_mod, sys.modules[__name__])
-    df, _ = deposit_or_reuse(
-        spark,
-        dedup_family.store_root(),
-        "bpe.vocab",
-        version,
-        [fp],
-        lambda: bpe.vocab_bpe(vocab),
-        _BPE_COMPUTES,
-        "bpe_vocab",
-    )
-    return df
+    return BPE.deposit(spark, "bpe_vocab", [fp], lambda: bpe.vocab_bpe(vocab))[0]
 
 
 def _bpe_word_counts(spark: SparkSession, sf_dir: str, dim: str):
@@ -576,9 +571,9 @@ def _bpe_learned(
     applied to the d57/d58 train→apply loop, which each re-ran the
     full training iterations inline):
 
-    - ``bpe.merges57`` — d57's report table, i.e. the learned merge
+    - ``docs.bpe_merges57`` — d57's report table, i.e. the learned merge
       artifact itself (≤ D57_MERGES rows);
-    - ``bpe.learned_vocab`` (``need_vt=True``) — the FULL distinct
+    - ``docs.bpe_learned_vocab`` (``need_vt=True``) — the FULL distinct
       corpus vocabulary tokenized under that artifact (word, n_tok),
       d58/d44's broadcast-join shape.
 
@@ -588,17 +583,6 @@ def _bpe_learned(
     never collect to the driver either way). Returns ``(report_df,
     vt_df_or_None)``; the report is UNORDERED (d57 re-applies its
     iteration ordering)."""
-    import sys
-
-    from ..operators import bpe as bpe_mod
-    from . import dedup_family
-    from .artifact_store import (
-        code_fingerprint,
-        deposit_or_reuse,
-        table_fingerprint,
-    )
-
-    version = "1+" + code_fingerprint(bpe_mod, sys.modules[__name__])
     fp = table_fingerprint(sf_dir, "documents", {"what": "bpe_learned"})
     stash: dict = {}
 
@@ -610,20 +594,11 @@ def _bpe_learned(
             .orderBy(F.desc("freq"), F.asc("word"))
             .limit(D57_VOCAB)
         )
-        report, tops = bpe_mod.bpe_train_merge_frames(vocab, D57_MERGES)
+        report, tops = bpe.bpe_train_merge_frames(vocab, D57_MERGES)
         stash["tops"] = tops
         return report
 
-    rep, rep_id = deposit_or_reuse(
-        spark,
-        dedup_family.store_root(),
-        "bpe.merges57",
-        version,
-        [fp],
-        build_merges,
-        _BPE_COMPUTES,
-        "bpe_merges57",
-    )
+    rep, rep_id = BPE.deposit(spark, "bpe_merges57", [fp], build_merges)
     if not need_vt:
         return rep, None
 
@@ -640,20 +615,11 @@ def _bpe_learned(
                 )
                 for i in range(1, D57_MERGES + 1)
             ]
-        return bpe_mod.bpe_apply_merge_frames(
+        return bpe.bpe_apply_merge_frames(
             _bpe_corpus_words(spark, sf_dir).distinct(), tops
         )
 
-    vt, _ = deposit_or_reuse(
-        spark,
-        dedup_family.store_root(),
-        "bpe.learned_vocab",
-        version,
-        [fp, rep_id],
-        build_vt,
-        _BPE_COMPUTES,
-        "bpe_learned_vocab",
-    )
+    vt, _ = BPE.deposit(spark, "bpe_learned_vocab", [fp, rep_id], build_vt)
     return rep, vt
 
 

@@ -8,8 +8,9 @@ d54 apply step each re-ran the whole corpus-sized trigram chain
 inline (trigram explode + five type-grain count aggregations + the
 eval-type joins — the r13 verdict's named improvement). This module
 deposits the chain's terminal table through the impression store
-(SURVEY §2.1 O5: content-addressed, skip-if-deposited), exactly the
-dedup/sim family discipline:
+(SURVEY §2.1 O5: content-addressed, skip-if-deposited) as ``FAMILY``
+deposits — the same :class:`~.artifact_store.Family` record the
+dedup/sim families use:
 
 - ``per_doc3`` — the trigram stupid-backoff per-doc score table
   ``(doc_id, source, n_tg, n_bo1, n_bo2, sum_bits, mean_bits)`` over
@@ -37,48 +38,51 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .artifact_store import (
-    code_fingerprint,
-    default_store_root,
-    deposit_or_reuse,
-    table_fingerprint,
-)
+from .artifact_store import Family, table_fingerprint
 
-# Effective version folds in a code hash of this module + the chain's
-# source modules (see dedup_family for the rationale); bump for
-# deliberate semantic changes that don't touch those files.
+# Effective version folds in a code hash of this module + the modules
+# each artifact's builder executes (see dedup_family for the
+# rationale); bump for deliberate semantic changes that don't touch
+# those files.
 LM_VERSION = "r14-1"
 
 COMPUTES: dict[str, int] = {}
 
+FAMILY = Family(
+    "lm_family",
+    "YUKI_SPARK_LM_STORE",
+    "yuki_spark-lm-family",
+    LM_VERSION,
+    (".lm_family",),
+    COMPUTES,
+)
+store_root = FAMILY.store_root
 
-def store_root() -> str | None:
-    return default_store_root("YUKI_SPARK_LM_STORE", "yuki_spark-lm-family")
+# Per-artifact code coverage: each artifact's address hashes exactly
+# the modules its builder executes, so an edit to an UNRELATED trainer
+# doesn't spuriously re-pay a corpus-sized build (r14 review:
+# invalidation stays precise per artifact). The scoring chains live in
+# queries/docs.py, which imports this module — Family resolves the
+# names lazily, so there is no import-time cycle.
+_LM_MODULES = (".docs", "..functions", "..operators.text")
+_CLF_MODULES = _LM_MODULES + ("..operators.classifier",)
 
 
-def _artifact(spark, sf_dir: str, name: str, dep_extra, builder, modules):
-    """Deposit-or-reuse one model-training artifact for this corpus.
-    The version folds a code hash of exactly the ``modules`` the
-    builder executes — any edit there invalidates, so the gates can
-    never validate a stale deposit, while an edit to an UNRELATED
-    trainer doesn't spuriously re-pay a corpus-sized build (r14
-    review: invalidation stays precise per artifact)."""
-    import sys
+def _per_doc(spark: SparkSession, sf_dir: str, name: str, chain: str) -> DataFrame:
+    """Deposit-or-reuse the per-doc score table ``docs.<chain>`` builds
+    over the tokenized corpus."""
+    import importlib
 
-    version = LM_VERSION + "+" + code_fingerprint(
-        sys.modules[__name__], *modules
-    )
+    from ..catalog import load
+    from ..operators import text as text_mod
+
+    def builder() -> DataFrame:
+        docs_mod = importlib.import_module(__package__ + ".docs")
+        t = text_mod.with_tokens(load(spark, sf_dir, "documents"))
+        return getattr(docs_mod, chain)(t)
+
     fp = table_fingerprint(sf_dir, "documents", {})
-    return deposit_or_reuse(
-        spark,
-        store_root(),
-        f"lm_family.{name}",
-        version,
-        [fp] + list(dep_extra),
-        builder,
-        COMPUTES,
-        name,
-    )
+    return FAMILY.deposit(spark, name, [fp], builder, _LM_MODULES)[0]
 
 
 def scored_per_doc3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,25 +91,7 @@ def scored_per_doc3(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns the UNORDERED deposit read — consumers' rollups are
     order-insensitive by construction (DEC-exact sums, per-doc
     doubles computed before the deposit)."""
-    import importlib
-
-    from .. import functions as fns
-    from ..catalog import load
-    from ..operators import text as text_mod
-
-    # the scoring chain lives in queries/docs.py, which imports this
-    # module — import by name to avoid the import-time cycle (the
-    # sim_family pattern)
-    docs_mod = importlib.import_module(__package__ + ".docs")
-
-    def builder() -> DataFrame:
-        t = text_mod.with_tokens(load(spark, sf_dir, "documents"))
-        return docs_mod._d56_per_doc(t)
-
-    df, _ = _artifact(
-        spark, sf_dir, "per_doc3", [], builder, (docs_mod, fns, text_mod)
-    )
-    return df
+    return _per_doc(spark, sf_dir, "per_doc3", "_d56_per_doc")
 
 
 def scored_per_doc2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,22 +102,7 @@ def scored_per_doc2(spark: SparkSession, sf_dir: str) -> DataFrame:
     call). Same bit-exact parquet roundtrip argument: sum_bits is
     DECIMAL, mean_bits is computed per doc BEFORE the deposit, and
     d52's per-source rollup is order-insensitive on those columns."""
-    import importlib
-
-    from .. import functions as fns
-    from ..catalog import load
-    from ..operators import text as text_mod
-
-    docs_mod = importlib.import_module(__package__ + ".docs")
-
-    def builder() -> DataFrame:
-        t = text_mod.with_tokens(load(spark, sf_dir, "documents"))
-        return docs_mod._d52_per_doc(t)
-
-    df, _ = _artifact(
-        spark, sf_dir, "per_doc2", [], builder, (docs_mod, fns, text_mod)
-    )
-    return df
+    return _per_doc(spark, sf_dir, "per_doc2", "_d52_per_doc")
 
 
 def clf_artifacts(spark: SparkSession, sf_dir: str):
@@ -145,13 +116,11 @@ def clf_artifacts(spark: SparkSession, sf_dir: str):
     its iteration ordering, d60 only joins the weights."""
     import importlib
 
-    from .. import functions as fns
     from ..catalog import load
     from ..operators import classifier
-    from ..operators import text as text_mod
 
     docs_mod = importlib.import_module(__package__ + ".docs")
-    mods = (docs_mod, fns, text_mod, classifier)
+    fp = table_fingerprint(sf_dir, "documents", {})
     stash: dict = {}
 
     def _train():
@@ -167,8 +136,8 @@ def clf_artifacts(spark: SparkSession, sf_dir: str):
         stash["w"] = w
         return report
 
-    curve, curve_id = _artifact(
-        spark, sf_dir, "clf_curve", [], build_curve, mods
+    curve, curve_id = FAMILY.deposit(
+        spark, "clf_curve", [fp], build_curve, _CLF_MODULES
     )
 
     def build_w() -> DataFrame:
@@ -180,5 +149,7 @@ def clf_artifacts(spark: SparkSession, sf_dir: str):
         _report, w = _train()
         return w
 
-    w, _ = _artifact(spark, sf_dir, "clf_w", [curve_id], build_w, mods)
+    w, _ = FAMILY.deposit(
+        spark, "clf_w", [fp, curve_id], build_w, _CLF_MODULES
+    )
     return curve, w

@@ -8,7 +8,8 @@ s12 graph recall) re-ran three or four whole index pipelines just to
 join their outputs. This module deposits the deterministic RESULT
 tables (every ANN operator ends in the same ``(qid, rk, cid,
 cosine)`` contract, exact-int scored, so a parquet roundtrip is
-bit-exact) through the impression store:
+bit-exact) through the impression store, as ``FAMILY`` deposits (the
+shared :class:`~.artifact_store.Family` record):
 
 - ``exact20`` — brute-force cosine top-k over the nq=20 query cohort
   (the ground truth s6 and s12 both join against)
@@ -20,8 +21,9 @@ bit-exact) through the impression store:
 Addresses cover the embeddings table fingerprint (part-file
 sizes/mtimes — the adaptive plane/probe parameters derive from its
 row count, so they are covered transitively) plus the query
-parameters; SIM_VERSION must be bumped on any algorithm change (O5
-version-bump contract). Ordering is NOT part of a deposit (parquet
+parameters and a code hash of the builder modules; SIM_VERSION is
+bumped for algorithm changes outside them (O5 version-bump contract).
+Ordering is NOT part of a deposit (parquet
 has no order): every consumer re-applies the operator's documented
 ``orderBy`` on read.
 """
@@ -32,22 +34,25 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .artifact_store import (
-    code_fingerprint,
-    default_store_root,
-    deposit_or_reuse,
-    table_fingerprint,
-)
+from .artifact_store import Family, table_fingerprint
 
-# Effective version folds in a code hash of this module +
-# operators/similarity.py (see dedup_family for the rationale).
+# Effective version folds in a code hash of this module,
+# operators/similarity.py and queries/sim.py — the builder lambdas live
+# in sim.py (e.g. s13's embedding slice), so an edit there must change
+# the address too (see dedup_family for the rationale).
 SIM_VERSION = "r6-1"
 
 COMPUTES: dict[str, int] = {}
 
-
-def store_root() -> str | None:
-    return default_store_root("YUKI_SPARK_SIM_STORE", "yuki_spark-sim-family")
+FAMILY = Family(
+    "sim_family",
+    "YUKI_SPARK_SIM_STORE",
+    "yuki_spark-sim-family",
+    SIM_VERSION,
+    (".sim_family", "..operators.similarity", ".sim"),
+    COMPUTES,
+)
+store_root = FAMILY.store_root
 
 
 def result(
@@ -60,29 +65,5 @@ def result(
     """Deposit-or-reuse one ANN result table for this corpus+params.
     Returns the UNORDERED deposit read — callers re-apply their
     operator's output ordering."""
-    import importlib
-    import sys
-
-    from ..operators import similarity
-
-    # The builder lambdas live in queries/sim.py (e.g. s13's embedding
-    # slice), so its source MUST be part of the address — without it an
-    # edit there keeps the old address and silently serves a stale
-    # deposit. Import by name: sim.py imports this module, so a direct
-    # `from . import sim` here would be circular at import time.
-    sim_mod = importlib.import_module(__package__ + ".sim")
     fp = table_fingerprint(sf_dir, "embeddings", {"params": params})
-    version = SIM_VERSION + "+" + code_fingerprint(
-        sys.modules[__name__], similarity, sim_mod
-    )
-    df, _ = deposit_or_reuse(
-        spark,
-        store_root(),
-        f"sim_family.{name}",
-        version,
-        [fp],
-        builder,
-        COMPUTES,
-        name,
-    )
-    return df
+    return FAMILY.deposit(spark, name, [fp], builder)[0]
