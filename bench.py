@@ -1,5 +1,6 @@
-"""Benchmark harness: times the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) and prints ONE JSON line:
+"""Benchmark harness: times every ``queries()`` key, in gate order, at
+$SPARK_GRAFT_SF_DIR (the sf0.1 test catalog by default) and prints ONE
+JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1}
@@ -18,70 +19,24 @@ import time
 
 from yuki_spark.session import get_spark
 
-# Headline set: EVERY queries() key (the r4 verdict flagged
-# the 47 untimed queries as regression-invisible). Ordering interleaves
-# the families; any key the entry exposes that is missing here is
-# appended automatically in main(), so a new query can never silently
-# drop out of the bench.
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "q9_product_profit",
-    "q13_customer_distribution",
-    "q18_large_orders",
-    "q2_min_cost_supplier",
-    "q8_market_share",
-    "q21_waiting_suppliers",
-    "q23_skyline_parts",
-    "w1_top_customers_per_nation",
-    "w2_running_revenue",
-    "e2_sessionization",
-    "e4_user_asof_value",
-    "e5_funnel",
-    "d1_exact_dedup",
-    "d3_minhash_lsh_dups",
-    "d6_quality_score",
-    "d7_token_stats",
-    "d9_embedding_neardup",
-    "d10_winnow_fingerprint",
-    "e8_error_window_stats",
-    "e9_json_props_stats",
-    "e13_zscore_outliers",
-    "s1_cosine_topk",
-    "s5_quantize_error",
-    "d16_repetition",
-    "d17_contamination",
-    "d18_sequence_packing",
-    "d19_tfidf_top_terms",
-    "d2_ngram_jaccard_dups",
-    "d4_simhash_dups",
-    "m1_multimodal_meta",
-    "d11_dedup_clusters",
-    "d20_dedup_apply",
-    "d21_corpus_split",
-    "d24_weighted_sample",
-    "s3_lsh_ann",
-    "s4_ivf_ann",
-    "s7_semdedup",
-    "e7_value_percentiles_approx",
-    "e12_heavy_hitters",
-    "p1_pii_scan",
-    "d26_quality_buckets",
-    "e18_rolling_active_users",
-    "e19_gap_fill",
-    "e20_mad_outliers",
-    "d27_bloom_contamination",
-    "s8_pq_ann",
-    "s9_kmeans_refine",
-    "d28_token_zipf",
-    "e21_cusum_drift",
-    "d29_dsir_weights",
-    "s10_cluster_balance",
-    "dq1_constraint_report",
-    "d30_oov_rate",
-    "s11_knn_graph",
-]
+# The family deposit stores main() points at a fresh root, by env var.
+_STORES = {
+    "YUKI_SPARK_DEDUP_STORE": "dedup",
+    "YUKI_SPARK_SIM_STORE": "sim",
+    "YUKI_SPARK_LM_STORE": "lm",
+    "YUKI_SPARK_PIPE_STORE": "pipe",
+}
+
+
+def _store_entries() -> set[str]:
+    """Every entry directly under the family store roots: a deposit is
+    one directory there, so a key that grows this set built one."""
+    out: set[str] = set()
+    for env in _STORES:
+        root = os.environ.get(env)
+        if root and os.path.isdir(root):
+            out.update(os.path.join(root, e) for e in os.listdir(root))
+    return out
 
 
 def _run(df) -> None:
@@ -144,10 +99,8 @@ def main() -> None:
     import tempfile  # noqa: PLC0415
 
     cold_root = tempfile.mkdtemp(prefix="yuki_spark-bench-cold-")
-    os.environ["YUKI_SPARK_DEDUP_STORE"] = os.path.join(cold_root, "dedup")
-    os.environ["YUKI_SPARK_SIM_STORE"] = os.path.join(cold_root, "sim")
-    os.environ["YUKI_SPARK_LM_STORE"] = os.path.join(cold_root, "lm")
-    os.environ["YUKI_SPARK_PIPE_STORE"] = os.path.join(cold_root, "pipe")
+    for env, sub in _STORES.items():
+        os.environ[env] = os.path.join(cold_root, sub)
     try:
         _main_body(sf_dir, sf)
     finally:
@@ -167,8 +120,7 @@ def _main_body(
         from __spark_entry__ import queries
 
         qs = queries()
-    names = [n for n in HEADLINE if n in qs]
-    names += [n for n in qs if n not in set(HEADLINE)]  # never drop a key
+    names = list(qs)
 
     spark = get_spark("yuki_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -201,31 +153,6 @@ def _main_body(
         lambda: _run(spark.range(32).select(pandas_udf(_noop, "long")("id"))),
     )
 
-    # Cold phase: first run of each family's deposit-building consumers
-    # against the fresh store — the measured one-time pipeline cost a
-    # production corpus pays ONCE (tokenize/PPJoin/CC for dedup; the
-    # exact/LSH/IVF/PQ result tables + kNN graph for sim). Every timed
-    # pass below then reads deposits: steady-state, as documented.
-    cold_keys = [
-        "d3_minhash_lsh_dups",   # rep token sets + LSH bands
-        "d11_dedup_clusters",    # exact J>=0.8 pairs + CC labels
-        "d4_simhash_dups",       # simhash pair table
-        "s6_ann_recall",         # exact/LSH/IVF/PQ result deposits
-        "s11_knn_graph",         # all-vectors kNN graph deposit
-        "s18_nn_descent",        # NN-descent refined-graph deposit
-        "s19_ivfpq_ann",         # shortlist-independent IVF-ADC table
-        "d44_bpe_tokens",        # tokenized-vocabulary deposit
-        "d50_image_phash_dups",  # rep-grain PNG encode/decode + dHash pairs
-        "s21_nn_descent_converge",  # second NN-descent generation deposit
-        "s22_hnsw_ann",          # level-1 kNN graph deposit
-        "s24_hnsw_multilevel",   # level-2 kNN graph deposit (3-level ladder)
-        "d56_trigram_lm_perplexity",  # trigram-LM per-doc score deposit (r14)
-        "d52_bigram_lm_perplexity",  # bigram-LM per-doc score deposit (r14 opt)
-        "d57_bpe_train",         # learned-BPE merges deposit (r14 opt)
-        "d58_learned_bpe_budget",  # learned-vocab apply deposit (r14 opt)
-        "pl1_curation_pipeline",  # the composed DAG's report impression (r14)
-        "d59_classifier_train",  # perceptron clf_curve/clf_w deposit (r14)
-    ]
     key_timeout = float(os.environ.get("SPARK_GRAFT_BENCH_KEY_TIMEOUT_S", "180"))
     # Cascade guard (r10 advice): if a hung key was a cold deposit
     # build, the abandoned daemon thread can hold the artifact store's
@@ -256,33 +183,44 @@ def _main_body(
             consecutive_timeouts = 0
         return dt
 
+    # Cold round: round 0 runs every key once against the fresh store
+    # main() created. A key whose run added a deposit under a family
+    # store root paid the one-time build a production corpus pays ONCE
+    # (tokenize/PPJoin/CC for dedup, the ANN result tables and graphs
+    # for sim, ...): that time is its cold_build_s, and it owes one
+    # extra steady sample after the last round. Every other key's
+    # round-0 time is its first steady sample.
+    samples: dict[str, list[float]] = {n: [] for n in names}
     cold_build_s: dict[str, float] = {}
-    for name in cold_keys:
+    for name in names:
         if aborted_after is not None:
             break  # cascade guard tripped: ship the partial artifact
-        if name in qs:
-            dt = guarded_key(name)
-            if dt is not None:
-                cold_build_s[name] = round(dt, 3)
+        before = _store_entries()
+        dt = guarded_key(name)
+        if dt is None:
+            continue
+        if _store_entries() - before:
+            cold_build_s[name] = round(dt, 3)
+        else:
+            samples[name].append(dt)
 
-    # min of 3 runs per query (min = steady-state plan cost; the
-    # per-query medians ride along so a noisy host is tellable from a
-    # real regression without re-running — the r2 report burned a
-    # session chasing four phantom regressions). Passes are
-    # round-robin under a wall-clock budget: every query gets its
-    # first run before any gets a second, so a slow host degrades
-    # gracefully to fewer samples instead of a missing BENCH row.
+    # min of RUNS steady samples per query (min = steady-state plan
+    # cost; the per-query medians ride along so a noisy host is
+    # tellable from a real regression without re-running — the r2
+    # report burned a session chasing four phantom regressions).
+    # Passes are round-robin under a wall-clock budget that starts
+    # after the cold round, so a slow host degrades gracefully to
+    # fewer samples; only a cold key whose extra sample misses the
+    # budget is left without a row (its cold_build_s still stands).
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "540"))
     t_start = time.perf_counter()
-    samples: dict[str, list[float]] = {n: [] for n in names}
-    for rnd in range(runs):
-        if aborted_after is not None:
-            break  # cascade guard tripped: ship the partial artifact
-        for name in names:
+    passes = [names] * (runs - 1) + [[n for n in names if n in cold_build_s]]
+    for keys in passes:
+        for name in keys:
             if aborted_after is not None:
-                break
-            if rnd > 0 and time.perf_counter() - t_start > budget_s:
+                break  # cascade guard tripped: ship the partial artifact
+            if time.perf_counter() - t_start > budget_s:
                 break
             if name in timed_out:
                 continue  # a hung key stays skipped; its row is the sentinel

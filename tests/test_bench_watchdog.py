@@ -163,3 +163,33 @@ def test_cascade_guard_aborts_tail(spark, tmp_path, monkeypatch, capsys):
     line = capsys.readouterr().out.strip().splitlines()[-1]
     parsed = json.loads(line)
     assert parsed["aborted_after"] == "hang2"
+
+
+def test_cold_round_detects_deposit_builds(spark, tmp_path, monkeypatch, capsys):
+    """Round 0 is the cold phase: only a key whose first run added an
+    entry under a family store root lands in cold_build_s, and it gets
+    one extra sample so every key still has RUNS steady samples."""
+    for fam in ("DEDUP", "SIM", "LM", "PIPE"):
+        monkeypatch.setenv(f"YUKI_SPARK_{fam}_STORE", str(tmp_path / fam.lower()))
+    dedup_root = tmp_path / "dedup"
+    calls = {"depositor": 0, "reader": 0}
+
+    def depositor(spark, sf_dir):
+        calls["depositor"] += 1
+        (dedup_root / "deposit").mkdir(parents=True, exist_ok=True)
+
+    def reader(spark, sf_dir):
+        calls["reader"] += 1
+
+    monkeypatch.setattr(bench, "_run", lambda df: None)  # no Spark job
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "2")
+    report = bench._main_body(
+        str(tmp_path),
+        0.001,
+        qs={"depositor": depositor, "reader": reader},
+        out_path=str(tmp_path / "bench_results.json"),
+    )
+    capsys.readouterr()
+    assert set(report["cold_build_s"]) == {"depositor"}
+    assert set(report["queries"]) == set(report["medians"]) == {"depositor", "reader"}
+    assert calls == {"depositor": 3, "reader": 2}

@@ -134,7 +134,7 @@ def test_real_curation_chain_composed_run(spark, tmp_path, monkeypatch):
     # the steady-state fast path's address computation must never
     # drift from the backend's: pl1 probes this address INSTEAD of
     # compiling the upstream stages on the reused path
-    assert C.pipeline_impressions(pipe2) == out2["impressions"]
+    assert pipe2.impression_ids() == out2["impressions"]
     assert [
         tuple(r)
         for r in out2["results"]["curation_report"].orderBy("lang").collect()

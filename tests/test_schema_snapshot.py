@@ -33,12 +33,10 @@ def test_snapshot_covers_exactly_the_query_surface():
     assert set(SNAPSHOT) == set(QUERIES)
 
 
-def test_every_key_has_an_oracle_and_a_priority_slot():
-    """Driver-contract invariants: every key oracle-gated, every key
-    ranked (the rotation list and the registry can never drift)."""
+def test_every_key_has_an_oracle():
+    """Entry-contract invariant: every key is oracle-gated."""
     oracles = entrymod.oracle_sql()
     assert set(QUERIES) <= set(oracles)
-    assert set(entrymod._PRIORITY) == set(QUERIES)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

@@ -349,22 +349,6 @@ def build_pipeline(spark: SparkSession, sf_dir: str):
     return p
 
 
-def pipeline_impressions(pipe) -> dict[str, str]:
-    """The impression address every task of ``pipe`` would get from a
-    plan_hash=False LocalBackend run with no failures. Lets a steady-
-    state caller probe the store for a terminal deposit WITHOUT
-    compiling any stage DataFrame (the skip-if-deposited read path —
-    at test scale the 9 stage compiles, three of them checkpoint
-    physical-planning, cost ~2.5 s per call on the reused path).
-
-    Delegates to ``Pipeline.impression_ids`` — the ONE structural
-    address derivation, kept next to the DAG so a future backend
-    addressing change (plan_hash default, failed-dep fallback) cannot
-    silently desynchronize this probe (r14 ADVICE). Address equality
-    with the backend is pinned in tests/test_pipeline_e2e.py."""
-    return pipe.impression_ids()
-
-
 def pl1_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run (or reuse) the composed curation DAG and return the
     deposited report. First call per (corpus, code) executes the
@@ -372,17 +356,18 @@ def pl1_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     deposit (status ``reused``) — the same cold/steady split the
     dedup/sim/LM family stores give their keys, here through the
     Pipeline's OWN reuse mechanism (SURVEY §2.1 O5). The steady-state
-    read probes the deposit address FIRST (pipeline_impressions) so a
-    reused run never compiles the upstream stages it will not
-    execute; the address chain covers the corpus fingerprint and the
-    code hash of every stage module, so any change falls through to
-    the full backend run exactly as before."""
+    read probes the deposit address FIRST (``Pipeline.impression_ids``,
+    the backend's own address derivation) so a reused run never
+    compiles the upstream stages it will not execute; the address
+    chain covers the corpus fingerprint and the code hash of every
+    stage module, so any change falls through to the full backend run
+    exactly as before."""
     from ..pipeline.backends import LocalBackend
     from ..pipeline.impressions import ImpressionStore
 
     store = ImpressionStore(store_root())
     pipe = build_pipeline(spark, sf_dir)
-    imp = pipeline_impressions(pipe)["curation_report"]
+    imp = pipe.impression_ids()["curation_report"]
     if store.exists(imp) and not store.is_archived(imp):
         return store.read(spark, imp).orderBy("lang")
     out = LocalBackend(store, persist={"curation_report"}).run(spark, pipe)

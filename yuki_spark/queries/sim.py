@@ -3435,8 +3435,7 @@ def _s16_oracle() -> str:
 def build_oracle() -> dict[str, str]:
     """Build the twin dict with adaptive parameters derived from the
     CURRENT gate catalog (env read now, not at import) — the canonical
-    entry point for __spark_entry__.oracle_sql(). The module-level
-    ``ORACLE`` snapshot below exists for direct imports and tests."""
+    entry point for __spark_entry__.oracle_sql()."""
     out = dict(_STATIC_ORACLE)
     out.update(
         {
@@ -3536,5 +3535,3 @@ _STATIC_ORACLE = {
         FROM ex GROUP BY label, dim ORDER BY label, dim
     """,
 }
-
-ORACLE = build_oracle()
